@@ -60,17 +60,6 @@ def embeddings(seed: int, n: int, spread: float) -> tuple[dict, dict]:
     return {"embeddings": _emb_table(ids, vecs, labels)}, {"ids": ids, "vecs": vecs, "labels": labels}
 
 
-def serve_request(seed: int, r: int, rows: int, spread: float, id_base: int) -> dict:
-    """Query batch ``r`` of the serving loop, drawn from the same
-    mixture as the training set (same centres: same seed stream)."""
-    centres = np.random.default_rng([seed, 1]).standard_normal((N_CLASSES, EMB_DIM))
-    rq = np.random.default_rng([seed, 2, r])
-    labels = rq.integers(0, N_CLASSES, rows).astype(np.int32)
-    vecs = (centres[labels] + spread * rq.standard_normal((rows, EMB_DIM))).astype(np.float32)
-    ids = np.arange(id_base + r * rows, id_base + (r + 1) * rows, dtype=np.int64)
-    return {"ids": ids, "vecs": vecs, "labels": labels}
-
-
 def _zipf_probs(vocab: int, s: float) -> np.ndarray:
     p = 1.0 / np.arange(1, vocab + 1, dtype=np.float64) ** s
     return p / p.sum()

@@ -19,29 +19,25 @@ TAU = 0.5  # queries.llm near-dup Jaccard threshold
 def knn_indices(q: np.ndarray, c: np.ndarray, c_ids: np.ndarray, k: int, q_ids=None) -> tuple[np.ndarray, np.ndarray]:
     """Exact kNN of every row of ``q`` among ``c`` (float64 Euclidean),
     ties by (dist, candidate id).  With ``q_ids`` given, a candidate
-    with the query's own id is excluded (leave-one-out)."""
-    q = q.astype(np.float64)
+    with the query's own id is excluded (leave-one-out).  Queries go
+    in blocks so the distance matrix stays small."""
     c = c.astype(np.float64)
-    d2 = (q * q).sum(1)[:, None] + (c * c).sum(1)[None, :] - 2.0 * (q @ c.T)
-    d = np.sqrt(np.maximum(d2, 0.0))
-    if q_ids is not None:
-        d[q_ids[:, None] == c_ids[None, :]] = np.inf
+    cc = (c * c).sum(1)
     take = min(c.shape[0], 2 * k + 8)
-    part = np.argpartition(d, take - 1, axis=1)[:, :take]
     idx = np.empty((q.shape[0], k), dtype=np.int64)
-    for i in range(q.shape[0]):
-        cols = part[i]
-        idx[i] = cols[np.lexsort((c_ids[cols], d[i, cols]))[:k]]
-    return idx, np.take_along_axis(d, idx, axis=1)
-
-
-def knn_vote(q, q_ids, q_labels, c, c_ids, c_labels, k: int) -> pd.DataFrame:
-    """Crisp kNN majority vote, vote ties to the smallest class."""
-    idx, _ = knn_indices(q, c, c_ids, k)
-    n_cls = int(c_labels.max()) + 1
-    counts = np.zeros((len(q_ids), n_cls), dtype=np.int64)
-    np.add.at(counts, (np.repeat(np.arange(len(q_ids)), k), c_labels[idx].ravel()), 1)
-    return pd.DataFrame({"vec_id": q_ids, "label": q_labels, "pred": counts.argmax(1)})
+    dist = np.empty((q.shape[0], k))
+    for lo in range(0, q.shape[0], 1024):
+        qb = q[lo : lo + 1024].astype(np.float64)
+        d = np.sqrt(np.maximum((qb * qb).sum(1)[:, None] + cc[None, :] - 2.0 * (qb @ c.T), 0.0))
+        if q_ids is not None:
+            d[q_ids[lo : lo + 1024, None] == c_ids[None, :]] = np.inf
+        part = np.argpartition(d, take - 1, axis=1)[:, :take]
+        for i in range(qb.shape[0]):
+            cols = part[i]
+            best = cols[np.lexsort((c_ids[cols], d[i, cols]))[:k]]
+            idx[lo + i] = best
+            dist[lo + i] = d[i, best]
+    return idx, dist
 
 
 def fknn(train_ids, train_x, train_y, test_ids, test_x, test_y, k: int) -> tuple[pd.DataFrame, int]:

@@ -2,9 +2,9 @@
 
 Usage (from the repository root):
 
-    python3 perfbench/run.py --workload fknn_batch --seed 1 --seconds 8 --trace 0
+    python3 perfbench/run.py --workload fknn_batch --seed 1 --seconds 5 --trace 0
 
-Workloads: fknn_batch, corpus_batch, knn_serve (see ``workloads.py`` and
+Workloads: fknn_batch, corpus_batch (see ``workloads.py`` and
 ``README.md``).  One process, one client, Spark on ``local[<nproc>]``.
 The run sets up once (session start, input write, load, warm-up) and
 reports that time as ``setup_s``, then runs operations back to back for
@@ -44,14 +44,14 @@ DRIVER_MEM = "4g"
 
 # Printed for every workload; BENCHMARK.json's end_to_end list names the
 # subset gated between runs.  The wall-time ones swung by up to 2x across
-# runs on a shared 4-core host whenever another tenant took cores, so the
-# gate uses CPU per row (ProcTree.cpu_s), which moved far less.
+# runs on a shared 4-vCPU host whenever another tenant took cores, so the
+# gate uses CPU per row (ProcTree.cpu_s), which moved less.
 E2E_UNITS = {
     "setup_s": "s",
-    "rows_per_s": "rows/s",
-    "request_p50_s": "s",
-    "peak_rss_mb": "MB",
     "cpu_ms_per_row": "ms/row",
+    "rows_per_s": "rows/s",
+    "op_p50_s": "s",
+    "peak_rss_mb": "MB",
 }
 
 # per-layer metric -> (span name, span field, how one operation's spans combine)
@@ -104,8 +104,19 @@ def _prepare_env(run_dir: str) -> None:
     )
 
 
-# JVM thread-name prefixes left out of cpu_s (see ProcTree.cpu_s)
-_UNCOUNTED_THREADS = ("C1 CompilerThre", "C2 CompilerThre", "GC Thread", "G1 ")
+# the JVM's JIT compiler threads, left out of cpu_s (see ProcTree.cpu_s)
+_JIT_THREADS = ("C1 CompilerThre", "C2 CompilerThre")
+
+
+def _stat(path: str) -> tuple[str, list[str]] | None:
+    """(name, fields after the name) of a /proc stat file; None once
+    the process or thread is gone."""
+    try:
+        with open(path) as f:
+            stat = f.read()
+    except OSError:
+        return None
+    return stat[stat.index("(") + 1 : stat.rfind(")")], stat[stat.rfind(")") + 2 :].split()
 
 
 class ProcTree:
@@ -116,19 +127,16 @@ class ProcTree:
         self.root_pid = root_pid
         self._page = os.sysconf("SC_PAGE_SIZE")
         self._tick = os.sysconf("SC_CLK_TCK")
+        self._lock = threading.Lock()
+        self._proc_ticks: dict[tuple[int, str], int] = {}  # (pid, start time) -> last utime + stime
+        self._jit_ticks: dict[str, int] = {}  # JVM thread id -> last utime + stime
+        self.jit_s = 0.0
 
     def pids(self) -> list[int]:
         kids: dict[int, list[int]] = {}
         for d in os.listdir("/proc"):
-            if not d.isdigit():
-                continue
-            try:
-                with open(f"/proc/{d}/stat") as f:
-                    stat = f.read()
-            except OSError:
-                continue
-            ppid = int(stat[stat.rfind(")") + 2 :].split()[1])
-            kids.setdefault(ppid, []).append(int(d))
+            if d.isdigit() and (st := _stat(f"/proc/{d}/stat")) is not None:
+                kids.setdefault(int(st[1][1]), []).append(int(d))
         out, stack = [], [self.root_pid]
         while stack:
             p = stack.pop()
@@ -147,30 +155,30 @@ class ProcTree:
         return total
 
     def cpu_s(self) -> float:
-        """User + system CPU seconds of the JVM's threads and of each
-        forked process's main thread.
+        """User + system CPU seconds the tree has used so far, less the
+        JVM's JIT compiler threads (their total is kept in ``jit_s``).
 
-        Left out, because their CPU time grows with contention from other
-        tenants rather than with the work done: the JVM's JIT compiler
-        threads (warm-up running on in the background), its garbage
-        collector threads (parallel phases spin while peers wait for a
-        core), and the extra threads of the Python workers (OpenBLAS
-        helpers busy-wait between calls).
+        Read per process, so every thread counts: the JVM's task, GC and
+        other threads (exited ones too) and each Python worker's OpenBLAS
+        helper threads.  A process that has exited keeps the figure last
+        read for it: the worker daemon ignores SIGCHLD, so its workers'
+        CPU never reaches its cutime.  RssSampler re-reads the tree every
+        second so little is lost that way.  The C1/C2 compiler threads
+        are left out: after warm-up they go on compiling in the
+        background at a rate that follows the host's load, not the work.
         """
-        ticks = 0
-        for p in self.pids():
-            tids = os.listdir(f"/proc/{p}/task") if p == self.root_pid else [str(p)]
-            for t in tids:
-                try:
-                    with open(f"/proc/{p}/task/{t}/stat") as f:
-                        stat = f.read()
-                except OSError:
-                    continue  # the thread or process exited
-                name = stat[stat.index("(") + 1 : stat.rfind(")")]
-                if name.startswith(_UNCOUNTED_THREADS):
-                    continue
-                ticks += sum(int(x) for x in stat[stat.rfind(")") + 2 :].split()[11:13])  # utime stime
-        return ticks / self._tick
+        with self._lock:
+            for p in self.pids():
+                if (st := _stat(f"/proc/{p}/stat")) is not None:
+                    f = st[1]
+                    self._proc_ticks[(p, f[19])] = int(f[11]) + int(f[12])
+            for t in os.listdir(f"/proc/{self.root_pid}/task"):
+                st = _stat(f"/proc/{self.root_pid}/task/{t}/stat")
+                if st is not None and st[0].startswith(_JIT_THREADS):
+                    self._jit_ticks[t] = int(st[1][11]) + int(st[1][12])
+            jit = sum(self._jit_ticks.values())
+            self.jit_s = jit / self._tick
+            return (sum(self._proc_ticks.values()) - jit) / self._tick
 
 
 class RssSampler(threading.Thread):
@@ -191,6 +199,7 @@ class RssSampler(threading.Thread):
                 return
             n += 1
             if n % 10 == 0:  # workers come and go: refresh the tree each second
+                self.tree.cpu_s()
                 pids = self.tree.pids()
 
     def stop(self) -> int:
@@ -260,16 +269,6 @@ def _median(xs: list[float]) -> float:
     return statistics.median(xs) if xs else 0.0
 
 
-def tail_latency(lat: list[float]) -> tuple[float | None, float | None, int]:
-    """Latency at the highest percentile with at least ten samples
-    beyond it: (value, percentile, samples beyond); None below 11 samples."""
-    n = len(lat)
-    if n < 11:
-        return None, None, 0
-    j = n - 10  # 1-based rank of the order statistic
-    return sorted(lat)[j - 1], round(100.0 * j / n, 2), n - j
-
-
 class Runner:
     def __init__(self, wl, seconds: float, traced: bool):
         from big_data_fknn_spark import cache, session, tables
@@ -295,6 +294,7 @@ class Runner:
             self.tracer.op = group
         wrappers = spans.layer_wrappers(tracer) if traced else contextlib.nullcontext()
         cpu0 = self.tree.cpu_s() + time.thread_time()
+        jit0 = self.tree.jit_s
         t0 = time.perf_counter()
         try:
             with wrappers, tracer.span("op"):
@@ -303,9 +303,10 @@ class Runner:
             rec["error"] = type(e).__name__
             traceback.print_exc(file=sys.stderr)
         rec["latency_s"] = time.perf_counter() - t0
-        # CPU of the JVM tree plus the driver thread: unlike wall time it
-        # does not grow when other tenants take the host's cores
+        # CPU of the JVM tree plus the driver thread: it grows far less
+        # than wall time when other tenants take the host's cores
         rec["cpu_s"] = self.tree.cpu_s() + time.thread_time() - cpu0
+        rec["jit_cpu_s"] = self.tree.jit_s - jit0
         if self.traced:
             spark.sparkContext.setLocalProperty("spark.jobGroup.id", None)
             rec["spark"] = spans.job_counts(spark.sparkContext, group)
@@ -334,13 +335,15 @@ class Runner:
 
     def timed(self, spark, state) -> None:
         deadline = time.perf_counter() + self.seconds
+        # traced runs need a plain and a traced operation at least
+        least = max(self.wl.timed_ops, 2) if self.traced else self.wl.timed_ops
         n = 0
         while True:
             # traced runs alternate plain and traced operations so the
             # tracing overhead is a paired difference
             self.run_op(spark, state, "timed", traced=self.traced and n % 2 == 1)
             n += 1
-            if time.perf_counter() >= deadline and (n >= 2 or not self.traced):
+            if time.perf_counter() >= deadline and n >= least:
                 return
 
 
@@ -454,7 +457,6 @@ def main(argv: list[str] | None = None) -> int:
         runner.timed(spark, state)
         wall = time.perf_counter() - t0
         peak_rss = sampler.stop()
-        wl.release(state)
     finally:
         if spark is not None:
             _stop_spark(spark)
@@ -468,16 +470,15 @@ def main(argv: list[str] | None = None) -> int:
     lat = [o["latency_s"] for o in plain]
     cpu = _median([o["cpu_s"] for o in plain])
     p50 = _median(lat)
-    tail, tail_pct, tail_beyond = tail_latency(lat)
     env["loadavg_start"] = load_start
     env["loadavg_end"] = _loadavg()
 
     e2e = {
         "setup_s": setup_s,
-        "rows_per_s": wl.rows_per_op / p50 if p50 else 0.0,
-        "request_p50_s": p50,
-        "peak_rss_mb": peak_rss / 2**20,
         "cpu_ms_per_row": 1000.0 * cpu / wl.rows_per_op,
+        "rows_per_s": wl.rows_per_op / p50 if p50 else 0.0,
+        "op_p50_s": p50,
+        "peak_rss_mb": peak_rss / 2**20,
     }
     report = {
         "workload": wl.name,
@@ -490,9 +491,7 @@ def main(argv: list[str] | None = None) -> int:
         "timed_wall_s": round(wall, 4),
         "latencies_s": [round(x, 4) for x in lat],
         "cpu_s": [round(o["cpu_s"], 3) for o in plain],
-        "request_tail_s": tail,
-        "request_tail_percentile": tail_pct,
-        "request_tail_samples_beyond": tail_beyond,
+        "jit_cpu_s": [round(o["jit_cpu_s"], 3) for o in plain],
         "error_rate": failed / attempted,
         "oracle": check,
         "env": env,
@@ -507,11 +506,7 @@ def main(argv: list[str] | None = None) -> int:
     print(f"perfbench {wl.name} seed={args.seed} seconds={args.seconds} trace={args.trace}")
     print("inputs " + json.dumps(wl.params, sort_keys=True))
     for k, v in e2e.items():
-        print(f"  {k:<16} {v:>14.4f} {E2E_UNITS[k]}")
-    if tail is None:
-        print(f"  {'request_tail_s':<16} {'n/a':>14} s  (only {len(lat)} requests: needs 11)")
-    else:
-        print(f"  {'request_tail_s':<16} {tail:>14.4f} s  (p{tail_pct}, {tail_beyond} samples beyond, n={len(lat)})")
+        print(f"  {k:<16} {v:>14.6g} {E2E_UNITS[k]}")
     print(f"  {'error_rate':<16} {failed / attempted:>14.4f} ratio  ({failed} failed of {attempted} attempted)")
     print(f"oracle {json.dumps(check, sort_keys=True)}")
     if args.trace:
